@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import codecs, datagen
-from ..tablelib import Catalog
+from ..tablelib import Catalog, local_frame
 from ..urlnorm import with_url_identity
 from .seenfilter import BLOOM_DDL, SeenBloom
 
@@ -141,8 +141,11 @@ class CrawlEngine:
         self.frontier = self.catalog.table(
             "frontier", FRONTIER_DDL, stats_cols=["not_before", "priority"]
         )
-        self.seen = self.catalog.table("seen", SEEN_DDL)
-        self.store = self.catalog.table("store", STORE_DDL)
+        # per-bucket row counts ride the seen and store manifests too: the
+        # bloom rebuild sizes its bitmaps from them, and they bound the
+        # engine's packed-commit row estimates
+        self.seen = self.catalog.table("seen", SEEN_DDL, stats_cols=["bucket"])
+        self.store = self.catalog.table("store", STORE_DDL, stats_cols=["bucket"])
         # host_state/lineage tables are small: no bucket dirs, no
         # shuffle-per-commit
         self.host_state = self.catalog.table("host_state", HOST_STATE_DDL, partitioned=False)
@@ -220,8 +223,8 @@ class CrawlEngine:
         expand_jvm's blocked-child draw."""
         if getattr(self, "_blocklist", None) is None:
             blocked = datagen.blocklist_hosts(self.cfg.seed, self.cfg.n_hosts)
-            self._blocklist = self.spark.createDataFrame(
-                list(enumerate(blocked)), "bi int, bhost string"
+            self._blocklist = local_frame(
+                self.spark, enumerate(blocked), "bi int, bhost string"
             ).cache()
         return self._blocklist
 
@@ -279,7 +282,7 @@ class CrawlEngine:
             .withColumn("retry_count", F.lit(0))
             .withColumn("not_before", F.lit(0))
             .select(*[c.strip().split(" ")[0] for c in FRONTIER_DDL.split(",")])
-        )
+        ).cache()  # both writes read it: canonicalize + gate + window once
         # the seed list size bounds both writes (dedup+gate only shrink it):
         # a small bootstrap packs to one file instead of one per bucket
         fid = self.frontier.overwrite(
@@ -288,13 +291,14 @@ class CrawlEngine:
         sid = self.seen.overwrite(
             s.select("url_hash", "bucket"), pack_rows=cfg.n_seed_urls
         )
+        s.unpersist()
         self._seen_rows_est = cfg.n_seed_urls  # upper bound, see seen_task
         self._store_rows_bound = 0  # fresh root: store starts empty
         # persist per-host robots verdicts (host_state is the robots cache).
         # Fully DISTRIBUTED: host universe from spark.range + the JVM
         # host-name expression, verdicts from the JVM robots_denied_col
         # twin — NOTHING host-shaped ships from the driver (the only
-        # createDataFrame is the O(8) blocklist config dim), so this
+        # driver-built frame is the O(8) blocklist config dim), so this
         # scales to the 10^8-host regime.
         bl = self._blocklist_df().select(F.col("bhost").alias("host"))
         hosts = (
@@ -329,13 +333,19 @@ class CrawlEngine:
         if self.cfg.expand:
             self._seed_dim_gated_df().count()
             self._permille_df().count()
-        bloom_id = (
-            self.seen_bloom.rebuild_buckets(
-                self.spark, self.seen, list(range(cfg.bucket_count))
+        if cfg.use_bloom:
+            # the seen write's census already holds the per-bucket counts
+            stats = self.seen.bucket_stats()
+            bloom_id = self.seen_bloom.rebuild_buckets(
+                self.spark, self.seen, list(range(cfg.bucket_count)),
+                counts=(
+                    {b: st["n"] for b, st in stats.items()}
+                    if stats is not None
+                    else None
+                ),
             )
-            if cfg.use_bloom
-            else self.seen_bloom.table.current_snapshot_id()
-        )
+        else:
+            bloom_id = self.seen_bloom.table.current_snapshot_id()
         self._checkpoint(
             -1,
             {
@@ -615,11 +625,11 @@ class CrawlEngine:
         """Politeness-gated, priority-ranked fetch batch for this epoch."""
         cfg = self.cfg
         if self.frontier.is_empty():
-            return self.spark.createDataFrame([], FRONTIER_DDL)
+            return local_frame(self.spark, [], FRONTIER_DDL)
         scan = self._frontier_scan_buckets(epoch) if cfg.prune_frontier_scan else None
         self._last_scan_buckets = scan  # observability + test hook
         if scan == []:
-            return self.spark.createDataFrame([], FRONTIER_DDL)
+            return local_frame(self.spark, [], FRONTIER_DDL)
         eligible = self.frontier.read(self.spark, buckets=scan).filter(
             F.col("not_before") <= epoch
         )
@@ -812,8 +822,9 @@ class CrawlEngine:
 
     def _permille_df(self) -> DataFrame:
         if getattr(self, "_permille", None) is None:
-            self._permille = self.spark.createDataFrame(
-                datagen.permille_rank_rows(self.cfg.n_hosts), "p int, rank int"
+            self._permille = local_frame(
+                self.spark, datagen.permille_rank_rows(self.cfg.n_hosts),
+                "p int, rank int",
             ).cache()
         return self._permille
 
@@ -1317,7 +1328,7 @@ class CrawlEngine:
                 disc_stats = discovered.groupBy("bucket").agg(F.count("*").alias("n")).collect()
                 n_discovered = sum(r["n"] for r in disc_stats)
             else:
-                discovered = spark.createDataFrame([], FRONTIER_DDL)
+                discovered = local_frame(spark, [], FRONTIER_DDL)
                 disc_stats = []
                 n_discovered = 0
 
@@ -1369,7 +1380,8 @@ class CrawlEngine:
                     {r["bucket"]: int(r["n"]) for r in disc_stats} if cfg.expand else {}
                 )
                 log_by_bucket = {r["bucket"]: r for r in log_rows}
-                log = spark.createDataFrame(
+                log = local_frame(
+                    spark,
                     [
                         (
                             epoch, b,

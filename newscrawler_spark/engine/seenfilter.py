@@ -39,7 +39,7 @@ from operator import and_
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tablelib import SnapshotTable
+from ..tablelib import SnapshotTable, local_frame
 
 BLOOM_DDL = "bucket int, words array<long>, m int, n_items long"
 K_HASHES = 5
@@ -256,18 +256,28 @@ class SeenBloom:
         return len(meta) if total_bytes <= 64 * 1024 * 1024 else None
 
     def rebuild_buckets(
-        self, spark: SparkSession, seen: SnapshotTable, buckets: list[int]
+        self,
+        spark: SparkSession,
+        seen: SnapshotTable,
+        buckets: list[int],
+        counts: dict[int, int] | None = None,
     ) -> int:
         """Recompute blooms for the buckets whose seen-set changed, sizing
-        each bucket's bitmap from its own key count (one tiny count job —
-        <= len(buckets) rows to the driver — then one build pass)."""
+        each bucket's bitmap from its own key count, then one build pass.
+        ``counts`` (per-bucket seen key counts, e.g. from the seen
+        manifest's zone maps) may be passed when the caller knows them
+        exactly for the current seen snapshot; otherwise one tiny count job
+        (<= len(buckets) rows to the driver) computes them."""
         if not buckets:
             return self.table.current_snapshot_id()
         rows = seen.read(spark, buckets=buckets)
-        counts = {
-            r["bucket"]: int(r["n"])
-            for r in rows.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
+        if counts is None:
+            counts = {
+                r["bucket"]: int(r["n"])
+                for r in rows.groupBy("bucket").agg(F.count("*").alias("n")).collect()
+            }
+        else:
+            counts = {b: counts[b] for b in buckets if counts.get(b)}
         if not counts:
             return self.table.current_snapshot_id()
         saturated = check_bucket_sizing(counts)
@@ -282,7 +292,8 @@ class SeenBloom:
                 "(required_bucket_count gives the absolute sizing)",
                 len(saturated), saturated[:8], worst, cap_keys, factor,
             )
-        mdf = spark.createDataFrame(
+        mdf = local_frame(
+            spark,
             [(b, _m_for(BUILD_HEADROOM * n)) for b, n in counts.items()],
             "bucket int, m int",
         )
@@ -294,9 +305,7 @@ class SeenBloom:
                 F.array(*_positions(F.col("url_hash"), F.col("m")))
             ).alias("pos"),
         )
-        counts_df = spark.createDataFrame(
-            [(b, n) for b, n in counts.items()], "bucket int, n_items long"
-        )
+        counts_df = local_frame(spark, counts.items(), "bucket int, n_items long")
         # rebuilds are the DENSE case: pre-aggregate to words before the
         # scatter (see _scatter_words_agg — ~7x smaller exchange at 10^8)
         dense = _scatter_words_agg(pos).join(F.broadcast(counts_df), on="bucket")
@@ -346,9 +355,7 @@ class SeenBloom:
         ok = [b for b in counts if b not in set(resize)]
         if not ok:
             return sorted(resize)
-        mdf = spark.createDataFrame(
-            [(b, meta[b][0]) for b in ok], "bucket int, m int"
-        )
+        mdf = local_frame(spark, [(b, meta[b][0]) for b in ok], "bucket int, m int")
         d2 = delta.join(F.broadcast(mdf), on="bucket")
         pos = d2.select(
             "bucket",
@@ -362,9 +369,7 @@ class SeenBloom:
             _scatter_positions(pos).withColumnRenamed("words", "dwords").drop("m")
         )
         old = self.table.read(spark).select("bucket", "words", "m", "n_items")
-        cdf = spark.createDataFrame(
-            [(b, counts[b]) for b in ok], "bucket int, n_new long"
-        )
+        cdf = local_frame(spark, [(b, counts[b]) for b in ok], "bucket int, n_new long")
         merged = (
             old.join(delta_dense, on="bucket")
             .join(F.broadcast(cdf), on="bucket")

@@ -36,8 +36,10 @@ directories can be read directly without basePath tricks.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import json
+import logging
 import os
 import shutil
 import tempfile
@@ -65,9 +67,12 @@ _PB = "pbucket"
 # small tables and small tail deltas at ANY scale — the row bound is a
 # proxy for "the whole delta fits in a fraction of one target-size file"
 # (64k rows x ~100 B ≈ 6 MB << the 64-512 MB target). Override with
-# SPARK_GRAFT_PACK_ROWS (0 disables packing).
+# SPARK_GRAFT_PACK_ROWS (0 disables packing). A packed delta is collected
+# through Arrow and written by the driver (see SnapshotTable._write_packed),
+# so the warehouse must be driver-visible — as the manifests already are.
 PACK_ROWS_DEFAULT = 65536
 _PACKED_MARK = "-packed"
+_log = logging.getLogger(__name__)
 
 
 def _is_packed(rel_dir: str) -> bool:
@@ -91,9 +96,20 @@ def take_driver_commit_seconds() -> float:
     return ns / 1e9
 
 
-def _atomic_write(path: str, content: str) -> None:
+@contextlib.contextmanager
+def _driver_commit_time():
+    """Count the enclosed driver-side work as driver commit time."""
     global _driver_commit_ns
     t0 = time.perf_counter_ns()
+    try:
+        yield
+    finally:
+        with _driver_commit_lock:
+            _driver_commit_ns += time.perf_counter_ns() - t0
+
+
+@_driver_commit_time()
+def _atomic_write(path: str, content: str) -> None:
     d = os.path.dirname(path)
     fd, tmp = tempfile.mkstemp(dir=d, prefix=".tmp-")
     try:
@@ -105,8 +121,93 @@ def _atomic_write(path: str, content: str) -> None:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
-        with _driver_commit_lock:
-            _driver_commit_ns += time.perf_counter_ns() - t0
+
+
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """A small driver-built DataFrame: config dims, per-bucket counts,
+    lineage rows, empty results.
+
+    The rows reach the JVM as one Arrow batch, so using the frame runs JVM
+    tasks only; a list ``createDataFrame`` goes through a PythonRDD and
+    starts a Python-worker job every time the frame is computed. An empty
+    frame is an empty RDD: zero partitions, so it launches no tasks."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    rows = list(rows)
+    if not rows:
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = [pa.array(c, type=f.type) for c, f in zip(zip(*rows), arrow_schema)]
+    return spark.createDataFrame(
+        pa.Table.from_arrays(cols, schema=arrow_schema), schema
+    )
+
+
+def _is_binary(t) -> bool:
+    import pyarrow as pa
+
+    return (
+        pa.types.is_binary(t) or pa.types.is_string(t)
+        or pa.types.is_large_binary(t) or pa.types.is_large_string(t)
+    )
+
+
+def _plain_bytes(arr) -> int:
+    """Size of ``arr``'s non-null values in parquet's PLAIN encoding."""
+    import pyarrow.compute as pc
+
+    n = len(arr) - arr.null_count
+    if _is_binary(arr.type):
+        return 4 * n + (pc.sum(pc.binary_length(arr)).as_py() or 0)
+    return n * arr.type.bit_width // 8
+
+
+def _dictionary_pays(values) -> bool:
+    """Whether to dictionary-encode a column, decided the way parquet-mr's
+    writer falls back to plain: only when the dictionary plus its
+    bit-packed indices come out smaller than the plain values. pyarrow's
+    default encodes every column, which on the engine's tables (unique
+    hashes) costs ~6% more disk than Spark's files; never encoding lists
+    costs sparse bloom bitmaps (mostly zero words) ~25%. A dictionary that
+    outgrows its page limit falls back to plain in pyarrow as in parquet-mr."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_nested(values.type) or pa.types.is_boolean(values.type):
+        return False  # a bit per bool already; no deeper nesting is written
+    uniq = pc.unique(values)
+    dict_bytes = _plain_bytes(uniq)
+    idx_bytes = len(values) * (len(uniq) - 1).bit_length() // 8
+    return dict_bytes + idx_bytes < _plain_bytes(values)
+
+
+def _write_parquet(tbl, out_dir: str) -> None:
+    """Write ``tbl`` as one snappy parquet file in a new dir, as Spark would:
+    one row group and no Arrow schema in the footer. String columns get no
+    min/max statistics: pyarrow repeats them in every page header, which
+    for ~1 KB captions cost the store ~7% more disk than Spark's files, and
+    nothing filters on a string range."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    leaves = []  # (parquet column path, values); a list's values stand in
+    for path, col in zip(tbl.column_names, tbl.columns):
+        if pa.types.is_list(col.type) or pa.types.is_large_list(col.type):
+            path, col = f"{path}.list.element", pc.list_flatten(col)
+        leaves.append((path, col))
+    os.makedirs(out_dir)
+    pq.write_table(
+        tbl,
+        os.path.join(out_dir, f"part-00000-{uuid.uuid4()}.snappy.parquet"),
+        compression="snappy",
+        use_dictionary=[p for p, v in leaves if _dictionary_pays(v)],
+        write_statistics=[p for p, v in leaves if not _is_binary(v.type)],
+        store_schema=False,
+    )
 
 
 @dataclass
@@ -193,9 +294,9 @@ class SnapshotTable:
         self.pack_rows_max = int(
             os.environ.get("SPARK_GRAFT_PACK_ROWS", str(PACK_ROWS_DEFAULT))
         )
-        # per-bucket stats for freshly written packed dirs, keyed by rel
-        # dir, consumed by the next _commit's dir_stats assembly
-        self._packed_pb: dict[str, dict] = {}
+        # dir_stats (with per-bucket "pb" maps) of freshly written packed
+        # dirs, keyed by rel dir, consumed by the _commit that names them
+        self._packed_stats: dict[str, dict] = {}
         self._commit_lock = threading.RLock()
         os.makedirs(os.path.join(self.dir, "manifests"), exist_ok=True)
         os.makedirs(os.path.join(self.dir, "data"), exist_ok=True)
@@ -256,7 +357,7 @@ class SnapshotTable:
         rel_dirs = self._selected(snap, snap.entries, buckets)
         if not rel_dirs:
             if self.schema_ddl:
-                return spark.createDataFrame([], self.schema_ddl)
+                return local_frame(spark, [], self.schema_ddl)
             raise ValueError(f"{self.name}: empty table and no schema_ddl to infer")
         reader = spark.read
         if self.schema_ddl:
@@ -319,38 +420,22 @@ class SnapshotTable:
         """Write df partitioned by bucket; return {bucket: [reldir]}.
 
         ``pack_rows``: caller's (upper-bound) row-count hint. When it is at
-        or under ``pack_rows_max`` the whole delta is written as ONE shared
-        dir/file registered under every bucket present (see PACK_ROWS_*
-        rationale at module top). ``repartition(1)`` (not coalesce: coalesce
-        would collapse the parallelism of the producing plan) bounds the
-        write to a single target-size-fraction file.
+        or under ``pack_rows_max`` the whole delta is written as ONE file by
+        the driver (see :meth:`_write_packed` and the PACK_ROWS_* rationale
+        at module top); otherwise Spark writes one dir per bucket, or one
+        dir for an unpartitioned table.
         """
-        if (
-            self.partitioned
-            and pack_rows is not None
+        packed = (
+            pack_rows is not None
             and 0 < self.pack_rows_max
             and pack_rows <= self.pack_rows_max
-        ):
-            rel = os.path.join("data", f"snap-{uuid.uuid4().hex[:12]}-{op}{_PACKED_MARK}")
-            out = os.path.join(self.dir, rel)
-            df.repartition(1).write.mode("overwrite").parquet(out)
-            present, pb = self._packed_readback(out)
-            if self.stats_cols:
-                self._packed_pb[rel] = pb
-            return {str(b): [rel] for b in present}
-        rel = os.path.join("data", f"snap-{uuid.uuid4().hex[:12]}-{op}")
+        )
+        mark = _PACKED_MARK if packed and self.partitioned else ""
+        rel = os.path.join("data", f"snap-{uuid.uuid4().hex[:12]}-{op}{mark}")
+        if packed:
+            return self._write_packed(df, rel, pack_rows)
         out = os.path.join(self.dir, rel)
         if not self.partitioned:
-            # same small-files rule for unpartitioned tables: a sub-
-            # threshold delta has no business writing one ~KB file per
-            # shuffle partition (host_state/fetch_log/crawl_order wrote
-            # 32-64 tiny files per epoch commit)
-            if (
-                pack_rows is not None
-                and 0 < self.pack_rows_max
-                and pack_rows <= self.pack_rows_max
-            ):
-                df = df.repartition(1)
             df.write.mode("overwrite").parquet(out)
             return {"all": [rel]}
         (
@@ -370,57 +455,72 @@ class SnapshotTable:
                 entries[b] = [os.path.join(rel, child)]
         return entries
 
+    def _write_packed(
+        self, df: DataFrame, rel: str, pack_rows: int
+    ) -> dict[str, list[str]]:
+        """Collect a small delta with one ``toArrow()`` job and write it as
+        ONE parquet file in the new dir ``rel`` from the driver.
+
+        For a delta this small a Spark write's fixed costs (a shuffle into
+        one task, a write job with its committer, then a re-read of the file
+        for the census) were the whole commit. A partitioned table registers
+        the dir under every bucket the delta holds, with exact per-bucket
+        zone maps from the in-memory table: the file's footer stats cover
+        every bucket and would overcount each one's row bound, which
+        ``_frontier_scan_buckets`` rule 2 relies on as a LOWER bound. The
+        dir is inert until a manifest names it. The driver-side write counts
+        as driver commit time."""
+        tbl = df.toArrow()
+        with _driver_commit_time():
+            if tbl.num_rows > pack_rows:
+                _log.warning(
+                    "%s: packed delta %s has %d rows, over its pack_rows hint "
+                    "of %d; it was collected on the driver",
+                    self.name, rel, tbl.num_rows, pack_rows,
+                )
+            if not self.partitioned:
+                _write_parquet(tbl, os.path.join(self.dir, rel))
+                return {"all": [rel]}
+            if not tbl.num_rows:
+                return {}  # registered under no bucket: nothing to write
+            _write_parquet(tbl, os.path.join(self.dir, rel))
+            pb = self._bucket_census(tbl)
+            if self.stats_cols:
+                # only the per-bucket maps are read for a packed dir
+                self._packed_stats[rel] = {
+                    "n": tbl.num_rows, "lo": {}, "hi": {}, "pb": pb
+                }
+            return {b: [rel] for b in sorted(pb, key=int)}
+
     def next_sid(self) -> int:
         return max(self.history()) + 1
 
-    def _packed_readback(self, out_abs: str) -> tuple[list[int], dict]:
-        """Driver-side per-bucket census of a freshly written packed dir.
+    def _bucket_census(self, tbl) -> dict[str, dict]:
+        """Per-bucket ``{"n", "lo", "hi"}`` of an in-memory packed delta.
 
-        A packed dir spans buckets, so the manifest needs (a) which buckets
-        to register it under and (b) exact per-bucket zone maps — a packed
-        dir's footer stats cover the whole file and would otherwise
-        overcount every bucket's row bound, which `_frontier_scan_buckets`
-        rule 2 relies on as a LOWER bound (unsound pruning). The dir is by
-        definition small (<= pack_rows_max rows), so reading the bucket +
-        stats columns with pyarrow on the driver costs ~ms and is counted
-        as driver commit time."""
-        global _driver_commit_ns
-        import pyarrow.parquet as pq
-
-        t0 = time.perf_counter_ns()
-        import pyarrow as pa
-
-        files = sorted(
-            fn for fn in os.listdir(out_abs) if fn.endswith(".parquet")
-        )
-        if not files:
-            with _driver_commit_lock:
-                _driver_commit_ns += time.perf_counter_ns() - t0
-            return [], {}
-        # stats columns may be absent (e.g. tombstone key files carry only
-        # (key, bucket)): request only what the file actually has — absent
-        # columns are simply omitted from the zone maps ("unbounded")
-        have = set(pq.read_schema(os.path.join(out_abs, files[0])).names)
+        Stats columns the delta lacks (tombstone key files carry only
+        (key, bucket)), and non-numeric or all-null ones, are omitted from
+        the zone maps, which readers treat as "unbounded"."""
         stat_cols = [
-            c for c in self.stats_cols if c != BUCKET_COL and c in have
+            c for c in self.stats_cols
+            if c != BUCKET_COL and c in tbl.column_names
         ]
-        cols = [BUCKET_COL] + stat_cols
-        parts = [
-            pq.read_table(os.path.join(out_abs, fn), columns=cols)
-            for fn in files
-        ]
-        tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
         aggs = [(BUCKET_COL, "count")] + [
             (c, fn) for c in stat_cols for fn in ("min", "max")
         ]
-        g = tbl.group_by(BUCKET_COL).aggregate(aggs).to_pydict()
+        g = (
+            tbl.select([BUCKET_COL] + stat_cols)
+            .group_by(BUCKET_COL)
+            .aggregate(aggs)
+            .to_pydict()
+        )
         pb: dict[str, dict] = {}
         for i, b in enumerate(g[BUCKET_COL]):
             lo: dict[str, Any] = {}
             hi: dict[str, Any] = {}
             for c in self.stats_cols:
                 if c != BUCKET_COL and c not in stat_cols:
-                    continue  # column absent from this file: unbounded
+                    continue  # column absent from this delta: unbounded
                 vlo = b if c == BUCKET_COL else g[f"{c}_min"][i]
                 vhi = b if c == BUCKET_COL else g[f"{c}_max"][i]
                 if (
@@ -432,10 +532,9 @@ class SnapshotTable:
                 lo[c] = vlo
                 hi[c] = vhi
             pb[str(b)] = {"n": g[f"{BUCKET_COL}_count"][i], "lo": lo, "hi": hi}
-        with _driver_commit_lock:
-            _driver_commit_ns += time.perf_counter_ns() - t0
-        return sorted(int(b) for b in pb), pb
+        return pb
 
+    @_driver_commit_time()
     def _footer_stats(self, rel_dirs: list[str]) -> dict[str, dict]:
         """Gather {n, lo, hi} per data dir from parquet footers — the same
         column stats an Iceberg writer records in its manifest files, read
@@ -444,10 +543,8 @@ class SnapshotTable:
         Columns with missing/non-numeric footer stats are omitted, which
         readers must treat as "unbounded". Counted as driver-resident
         commit time."""
-        global _driver_commit_ns
         import pyarrow.parquet as pq
 
-        t0 = time.perf_counter_ns()
         out: dict[str, dict] = {}
         want = set(self.stats_cols)
         for rel in rel_dirs:
@@ -485,8 +582,6 @@ class SnapshotTable:
                 lo.pop(b, None)
                 hi.pop(b, None)
             out[rel] = {"n": n, "lo": lo, "hi": hi}
-        with _driver_commit_lock:
-            _driver_commit_ns += time.perf_counter_ns() - t0
         return out
 
     def bucket_stats(self, snapshot_id: int | None = None) -> dict[int, dict] | None:
@@ -571,19 +666,18 @@ class SnapshotTable:
         dir_seq = {d: s for d, s in dir_seq.items() if d in live}
         dir_stats: dict[str, dict] = {}
         if self.stats_cols:
-            dir_stats = dict(parent_snap.dir_stats)
+            dir_stats = {
+                d: s for d, s in parent_snap.dir_stats.items() if d in live
+            }
+            new = [d for d in sorted(live) if d not in dir_stats]
+            # packed dirs carry the exact per-bucket zone maps computed at
+            # write time (see _write_packed); the rest read their footers
+            for d in new:
+                if d in self._packed_stats:
+                    dir_stats[d] = self._packed_stats.pop(d)
             dir_stats.update(
-                self._footer_stats([d for d in sorted(live) if d not in dir_stats])
+                self._footer_stats([d for d in new if d not in dir_stats])
             )
-            dir_stats = {d: s for d, s in dir_stats.items() if d in live}
-            # packed dirs span buckets: attach the exact per-bucket zone
-            # maps computed at write time (whole-file footer stats would
-            # overcount every registered bucket — see _packed_readback)
-            for d in list(dir_stats):
-                if _is_packed(d) and "pb" not in dir_stats[d]:
-                    pb = self._packed_pb.pop(d, None)
-                    if pb is not None:
-                        dir_stats[d] = {**dir_stats[d], "pb": pb}
         snap = Snapshot(
             sid, parent, op, entries, summary, deletes, dir_seq, dir_stats
         )

@@ -406,3 +406,121 @@ def test_packed_partial_merge_does_not_resurrect_stale_rows(spark, cat):
     rows = t.read(spark).collect()
     assert len(rows) == 3
     assert {r["k"]: r["v"] for r in rows} == {1: "a", 2: "B", 7: "g"}
+
+
+# ------------------------------------------- driver-written packed commits
+
+# every column type the engine's tables use
+ALL_DDL = (
+    "k long, bucket int, s string, p double, ts timestamp, ok boolean, "
+    "words array<long>, nb int"
+)
+
+
+def _all_rows():
+    import datetime as dt
+
+    base = dt.datetime(2024, 1, 1, 12, 30, 15, 123456)
+    return [
+        (
+            i, i % 3, None if i % 4 == 0 else f"s{i % 5}", i / 7.0,
+            base + dt.timedelta(hours=i), i % 2 == 0,
+            [i, -i, 1 << 62] if i % 5 else [], i % 6,
+        )
+        for i in range(30)
+    ]
+
+
+def _packed_files(t):
+    import os
+
+    dirs = {d for ds in t.snapshot().entries.values() for d in ds}
+    return [
+        os.path.join(t.dir, d, f)
+        for d in sorted(dirs)
+        for f in os.listdir(os.path.join(t.dir, d))
+        if f.endswith(".parquet")
+    ]
+
+
+def test_packed_roundtrip_every_engine_type(spark, cat):
+    import pyarrow.parquet as pq
+
+    t = cat.table("t", ALL_DDL, stats_cols=["nb", "p"])
+    src = spark.createDataFrame(_all_rows(), ALL_DDL)
+    t.append(src, pack_rows=30)
+    assert sorted(t.read(spark).collect()) == sorted(src.collect())
+    (path,) = _packed_files(t)
+    # timestamps are stored UTC-adjusted, and no Arrow schema in the footer
+    assert pq.read_schema(path).field("ts").type.tz == "UTC"
+    assert b"ARROW:schema" not in (pq.read_metadata(path).metadata or {})
+    # zone maps equal a per-bucket census of the written file itself
+    g = (
+        pq.read_table(path, columns=["bucket", "nb", "p"])
+        .group_by("bucket")
+        .aggregate([("bucket", "count"), ("nb", "min"), ("nb", "max"),
+                    ("p", "min"), ("p", "max")])
+        .to_pydict()
+    )
+    want = {
+        b: {"n": g["bucket_count"][i], "tomb": 0,
+            "lo": {"nb": g["nb_min"][i], "p": g["p_min"][i]},
+            "hi": {"nb": g["nb_max"][i], "p": g["p_max"][i]}}
+        for i, b in enumerate(g["bucket"])
+    }
+    assert t.bucket_stats() == want
+    # a 0-row delta registers nothing and changes no row
+    t.append(src.limit(0), pack_rows=0)
+    assert t.bucket_stats() == want
+    assert t.read(spark).count() == 30
+
+
+def test_packed_unpartitioned_roundtrip_and_empty_overwrite(spark, cat):
+    t = cat.table("u", ALL_DDL, partitioned=False)
+    src = spark.createDataFrame(_all_rows(), ALL_DDL)
+    t.overwrite(src, pack_rows=30)
+    assert sorted(t.read(spark).collect()) == sorted(src.collect())
+    # an empty packed overwrite leaves an empty table with its schema
+    t.overwrite(src.limit(0), pack_rows=0)
+    back = t.read(spark)
+    assert back.count() == 0 and back.schema == src.schema
+
+
+def _group_jobs(spark, group, fn) -> list[int]:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_packed_append_is_one_job_and_local_frames_skip_python(spark, cat):
+    from newscrawler_spark.tablelib import local_frame
+
+    t = cat.table("t", DDL, stats_cols=["k"])
+    df = local_frame(spark, [(i, i % 4, "x") for i in range(40)], DDL)
+    jobs = _group_jobs(spark, "packed-append", lambda: t.append(df, pack_rows=40))
+    assert len(jobs) == 1  # the Arrow collect; no shuffle, write or re-read
+    assert {r["k"] for r in t.read(spark).collect()} == set(range(40))
+    # driver-built frames are JVM-only: no PythonRDD feeds them, so using
+    # one never starts a Python worker; an empty one has no partitions
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    empty = local_frame(spark, [], DDL)
+    assert empty._jdf.queryExecution().toRdd().getNumPartitions() == 0
+    jobs = _group_jobs(spark, "empty-frame", empty.collect)
+    tracker = spark.sparkContext.statusTracker()
+    assert sum(
+        tracker.getStageInfo(s).numTasks
+        for j in jobs
+        for s in tracker.getJobInfo(j).stageIds
+    ) == 0
+
+
+def test_packed_write_over_its_hint_warns(spark, cat, caplog):
+    t = cat.table("t", DDL)
+    with caplog.at_level("WARNING", logger="newscrawler_spark.tablelib"):
+        t.append(_df(spark, [(i, i % 2, "x") for i in range(5)]), pack_rows=2)
+    assert any("over its pack_rows hint" in r.message for r in caplog.records)
+    assert t.read(spark).count() == 5
